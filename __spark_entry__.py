@@ -1326,7 +1326,9 @@ def q_cdc_op_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cdc_hot_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G1 skew stats: hot conv_ids + the salt factor the engine would use.
+    """G1 skew stats: hot conv_ids + ``salt_factor``, each key's multiple
+    of the hot threshold (the fan-out a salted two-phase dedupe would need;
+    the engine's combinable LWW needs none and only flags hot epochs).
 
     SINGLE pass (round-3 verdict #5): the threshold (0.5% of total events,
     min 1) is derived in-plan from a global window over the per-key

@@ -34,7 +34,7 @@ from __future__ import annotations
 import threading
 import time
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -70,6 +70,9 @@ class MergeResult:
     duration_sec: float
     strategy: str  # "broadcast" | "sort-merge" | "noop" | "skipped-duplicate"
     staged_id: str | None = None  # set when merged with staged=True (WAP)
+    # strategies the chain walked past on an execution failure, in order:
+    # [{"strategy": ..., "error_class": ...}]
+    fallbacks: list[dict] = field(default_factory=list)
 
 
 _PX_COL = "_px"  # materialized parsed-payload struct column
@@ -209,9 +212,6 @@ def merge_into(
     deduped: DataFrame,
     tag: dict | None = None,
     broadcast_threshold_rows: int = 100_000,
-    batch_counts: tuple[int, int] | None = None,
-    split_light_buckets: bool = False,
-    light_bucket_max_rows: int = 1_000,
     delta_auto_ratio: float | None = None,
     batch_transform=None,
     staged: bool = False,
@@ -230,19 +230,8 @@ def merge_into(
     Exactly-once: if ``tag`` = {source_id, batch_id} already committed, the
     merge is a no-op (replay safety; T3 in SURVEY §2.8).
 
-    ``split_light_buckets`` enables the CROSS-STRATEGY SPLIT for bimodal
-    epochs in the sort-merge regime (reference analog: one batch divided
-    across backends by hw_load fraction,
-    /root/reference/extensions/nvjpeg/hw_decoder.cpp:520-532): buckets
-    whose batch slice is tiny (≤ ``light_bucket_max_rows``) are applied
-    via the broadcast path — their TABLE data never shuffles — while the
-    heavy buckets take the sort-merge path; both halves land in ONE
-    atomic commit. Measured on a 3M-row table with a 200k-events-on-2-
-    buckets + trickle-everywhere epoch: ~5% over all-sort-merge at this
-    SF; the win grows with the table-rows-to-batch-rows ratio of the
-    light buckets (it's exactly their table-side shuffle that's saved).
-    Off by default — per-batch strategy choice is the right shape for
-    unimodal epochs.
+    Strategies the runtime chain walked past on an execution failure are
+    listed in ``MergeResult.fallbacks``.
     """
     t0 = time.time()
     if staged:
@@ -313,11 +302,8 @@ def merge_into(
             )
             .collect()
         )
-        if batch_counts is not None:
-            n_upserts, n_deletes = batch_counts
-        else:
-            n_upserts = sum(int(r["u"] or 0) for r in stats)
-            n_deletes = sum(int(r["d"] or 0) for r in stats)
+        n_upserts = sum(int(r["u"] or 0) for r in stats)
+        n_deletes = sum(int(r["d"] or 0) for r in stats)
         n_batch = n_upserts + n_deletes
         touched = [r[BUCKET_COL] for r in stats]
         if not touched:
@@ -408,39 +394,11 @@ def merge_into(
             chain = [("broadcast", _merge_broadcast), ("sort-merge", _merge_sortmerge)]
         else:
             chain = [("sort-merge", _merge_sortmerge)]
-            if split_light_buckets:
-                light = [
-                    r[BUCKET_COL]
-                    for r in stats
-                    if (int(r["u"] or 0) + int(r["d"] or 0)) <= light_bucket_max_rows
-                ]
-                light_rows = sum(
-                    int(r["u"] or 0) + int(r["d"] or 0)
-                    for r in stats
-                    if r[BUCKET_COL] in set(light)
-                )
-                heavy = [b for b in touched if b not in set(light)]
-                if light and heavy and light_rows <= broadcast_threshold_rows:
-
-                    def _merge_split(cur_ignored, batch_df, kc, ac, _l=light, _h=heavy):
-                        sid = snap0.snapshot_id  # same pinned snapshot
-                        cur_h = table.read(snapshot_id=sid, buckets=_h, with_system=True)
-                        cur_l = table.read(snapshot_id=sid, buckets=_l, with_system=True)
-                        b_h = batch_df.where(F.col(BUCKET_COL).isin(_h))
-                        b_l = batch_df.where(F.col(BUCKET_COL).isin(_l))
-                        return _merge_sortmerge(cur_h, b_h, kc, ac).unionByName(
-                            _merge_broadcast(cur_l, b_l, kc, ac)
-                        )
-
-                    chain = [
-                        (f"split(light:{len(light)},heavy:{len(heavy)})", _merge_split),
-                        ("sort-merge", _merge_sortmerge),
-                    ]
 
         summary = {"upserts": n_upserts, "deletes": n_deletes}
 
         def run_chain() -> MergeResult:
-            last_err: Exception | None = None
+            fallbacks: list[dict] = []
             for strategy, impl in chain:
                 try:
                     merged = impl(current, batch, key_cols, all_cols)
@@ -452,13 +410,15 @@ def merge_into(
                         return MergeResult(
                             None, sorted(touched), n_upserts, n_deletes,
                             time.time() - t0, f"staged-{strategy}", staged_id=sid,
+                            fallbacks=fallbacks,
                         )
                     snap = table.replace_buckets(
                         sorted(touched), merged, tag=tag, summary=summary,
                         assumed_files=assumed,
                     )
                     return MergeResult(
-                        snap, sorted(touched), n_upserts, n_deletes, time.time() - t0, strategy
+                        snap, sorted(touched), n_upserts, n_deletes,
+                        time.time() - t0, strategy, fallbacks=fallbacks,
                     )
                 except (ConcurrentModification, CommitConflict):
                     # NOT an execution failure — a racing writer committed after
@@ -469,10 +429,12 @@ def merge_into(
                     # owns the retry: re-scan, re-merge, re-commit.
                     raise
                 except Exception as e:  # noqa: BLE001 — chain walks on any exec failure
-                    last_err = e
                     if strategy == chain[-1][0]:
                         raise
-            raise last_err  # pragma: no cover — loop always returns or raises
+                    fallbacks.append(
+                        {"strategy": strategy, "error_class": type(e).__name__}
+                    )
+            raise AssertionError("unreachable: the last strategy returns or raises")
 
         if n_batch <= broadcast_threshold_rows:
             with _small_batch_confs(table.spark):
@@ -548,7 +510,6 @@ def merge_into_delta(
     table: LakeTable,
     deduped: DataFrame,
     tag: dict | None = None,
-    compact_max_delta_files: int | None = None,
     batch_transform=None,
 ) -> MergeResult:
     """Merge-on-read apply: identical input contract and exactly-once
@@ -564,12 +525,8 @@ def merge_into_delta(
     with the same order comparator (LakeTable.read), so correctness —
     cross-epoch LWW, tombstones, no-resurrection — is shared, not
     re-implemented. Hudi MOR / Iceberg merge-on-read rebuilt Spark-first.
-
-    ``compact_max_delta_files``: if set, buckets that now hold more than
-    this many delta layers are folded back into base files in a SECOND
-    atomic commit (bucket-granular; read amplification stays bounded).
-    The reference analog is the staged device buffer that absorbs small
-    writes and flushes when full (batched sink reserve/flush, SURVEY S6).
+    Fold-back of accumulated layers is the caller's maintenance step
+    (``LakeTable.compact_deltas``).
     """
     t0 = time.time()
     if tag is not None and table.has_commit_tag(tag["source_id"], tag["batch_id"]):
@@ -610,14 +567,6 @@ def merge_into_delta(
         )
     finally:
         batch.unpersist()
-    if compact_max_delta_files is not None:
-        try:
-            table.compact_deltas(max_delta_files=compact_max_delta_files)
-        except (ConcurrentModification, CommitConflict):
-            # fold-back is maintenance, not the epoch: the delta commit
-            # above already landed, so a racing writer here must not fail
-            # the apply — layers fold on the next quiet pass
-            pass
     return MergeResult(
         snap, touched, n_upserts, n_deletes, time.time() - t0, "delta-append"
     )

@@ -14,11 +14,11 @@ Two run modes over the same epoch function:
 
 Epoch anatomy (both modes), mirroring SURVEY §3.1:
   parse → split schema events → apply schema updates (barrier before data,
-  LSN-ordered) → LWW dedupe (salted if the epoch is hot) → strategy-chosen
-  MERGE INTO (broadcast vs sort-merge) → lineage append → tagged atomic
-  snapshot commit. The commit is the LAST thing to happen before the
-  checkpoint advances; "merge applied but checkpoint not advanced" replays
-  hit the tag check and no-op (SURVEY §7.3 hard part 1).
+  LSN-ordered) → LWW dedupe → strategy-chosen MERGE INTO (broadcast vs
+  sort-merge) → lineage append → tagged atomic snapshot commit. The commit
+  is the LAST thing to happen before the checkpoint advances; "merge
+  applied but checkpoint not advanced" replays hit the tag check and no-op
+  (SURVEY §7.3 hard part 1).
 """
 
 from __future__ import annotations
@@ -42,13 +42,9 @@ from nvimagecodec_spark.operators.schema_events import (
     reextract_payloads,
     split_schema_events,
 )
-from nvimagecodec_spark.operators.skew import lww_dedupe_salted
 from nvimagecodec_spark.sources.changelog import ChangeStream, parse_changes, with_lineage
 from nvimagecodec_spark.streaming.lineage import LineageLog
-from nvimagecodec_spark.streaming.ratelimit import (
-    AdaptiveRateController,
-    AdaptiveSplitController,
-)
+from nvimagecodec_spark.streaming.ratelimit import AdaptiveRateController
 
 
 class CdcEngine:
@@ -87,17 +83,6 @@ class CdcEngine:
             cap=self.config.target_batch_events,
             min_cap=self.config.min_batch_events,
             max_cap=self.config.max_batch_events,
-        )
-        # split_light_buckets="auto": feedback-tuned split fraction
-        # (reference adjustBatchSizes); seeded by light_bucket_max_rows,
-        # never above the broadcast row threshold.
-        self.split_ctl = (
-            AdaptiveSplitController(
-                threshold=self.config.light_bucket_max_rows,
-                max_threshold=self.config.broadcast_threshold_rows,
-            )
-            if self.config.split_light_buckets == "auto"
-            else None
         )
 
     # how many per-source-file lineage rows an epoch record keeps verbatim
@@ -377,18 +362,10 @@ class CdcEngine:
         n_events = stats["n_events"]
         hot = stats["max_key_events"] > self.config.hot_key_threshold
         # Hot epochs are DETECTED and recorded in lineage (monitoring /
-        # alerting), but the dedupe stays on plain lww_dedupe: its
-        # map-side partial max already collapses a hot key to one row
-        # per map partition before the shuffle, so the reducer sees at
-        # most num_map_tasks rows per key. Measured on a 10M-event
-        # stream with 50% of events on ONE key at local[32]: plain
-        # 1.2s, salted 3.6s — the salt's second shuffle strictly loses
-        # when the agg is combinable. lww_dedupe_salted remains the
-        # tool for NON-combinable formulations (see operators/skew.py).
-        if hot and self.config.salt_non_combinable:
-            deduped = lww_dedupe_salted(data, salt_buckets=self.config.salt_buckets)
-        else:
-            deduped = lww_dedupe(data)
+        # alerting) only: lww_dedupe's map-side partial max already
+        # collapses a hot key to one row per map partition before the
+        # shuffle, so the reducer sees at most num_map_tasks rows per key.
+        deduped = lww_dedupe(data)
 
         n_violations = 0
         if self.config.constraints:
@@ -432,12 +409,6 @@ class CdcEngine:
             # whose CoW rewrite would exceed ratio x batch rows go delta,
             # backfills/initial loads stay CoW (G4 adaptive-split analog)
             auto = self.config.mor_deltas == "auto"
-            if self.split_ctl is not None:
-                planned = self.split_ctl.plan()  # 0 = baseline probe epoch
-                do_split, light_max = planned > 0, planned or 1
-            else:
-                do_split = bool(self.config.split_light_buckets)
-                light_max = self.config.light_bucket_max_rows
             res = merge_into(
                 self.table,
                 deduped,
@@ -446,75 +417,51 @@ class CdcEngine:
                 # staging is CoW by contract
                 tag=None if staged else {"source_id": self.source_id, "batch_id": batch_id},
                 broadcast_threshold_rows=self.config.broadcast_threshold_rows,
-                split_light_buckets=do_split,
-                light_bucket_max_rows=light_max,
                 delta_auto_ratio=(
                     None if staged else (self.config.mor_auto_ratio if auto else None)
                 ),
                 batch_transform=self.batch_transform,
                 staged=staged,
             )
-            if self.split_ctl is not None:
-                self.split_ctl.observe(
-                    res.strategy, res.upserts + res.deletes, res.duration_sec
-                )
         # the adaptive controller's signal is steady-state APPLY
         # throughput — including the periodic maintenance below would
         # shrink the cap after every sweep epoch (review-caught)
         apply_secs = time.time() - t0
         self.rate.observe(n_events, apply_secs)
 
+        # Post-commit MAINTENANCE: the epoch's tagged commit already
+        # landed, so a racing writer here must never fail the streaming
+        # query — the contended step is skipped (recorded in lineage) and
+        # simply runs on a later epoch.
+        skipped: list[str] = []
         if res.strategy == "delta-append":
-            # bucket-granular fold-back bounds read amplification; it is
-            # MAINTENANCE — the epoch's tagged commit already landed, so a
-            # racing writer here must not fail the streaming query (the
-            # layers just fold on a later epoch instead)
-            try:
-                self.table.compact_deltas(
-                    max_delta_files=self.config.delta_compact_max_files
-                )
-            except (ConcurrentModification, CommitConflict):
-                pass
+            # bucket-granular fold-back bounds read amplification
+            self._maintain(
+                skipped,
+                "compact_deltas",
+                max_delta_files=self.config.delta_compact_max_files,
+            )
 
         # retention hygiene: bound metadata growth (full file manifest per
-        # snapshot) + reclaim data files of expired snapshots. Runs AFTER
-        # the tagged commit; expiry never touches live files.
-        if (
-            self.config.expire_every_epochs
-            and not staged  # maintenance commits would invalidate the
-            # staged baseline (compaction rewrites the very buckets the
-            # pending publish validates against) — the txn owner publishes
-            # first; maintenance runs on later, non-staged epochs
-            and batch_id > 0
-            and batch_id % self.config.expire_every_epochs == 0
-        ):
-            try:
-                self.table.expire_snapshots(keep_last=self.config.keep_snapshots)
-            except (ConcurrentModification, CommitConflict):
-                # post-commit maintenance — same contract as compact_deltas
-                # and the optimize sweep: a racing writer must never fail
-                # the streaming query; retention just runs next time
-                pass
-
+        # snapshot) + reclaim data files of expired snapshots; expiry
+        # never touches live files.
+        if self._due(self.config.expire_every_epochs, batch_id, staged):
+            self._maintain(
+                skipped,
+                "expire_snapshots",
+                keep_last=self.config.keep_snapshots,
+            )
         # periodic FULL maintenance (optimize: fold deltas + bin-pack +
-        # expire + orphans) — post-commit like compact_deltas, so a racing
-        # writer must never fail the streaming query; the skipped step
-        # just runs on a later sweep.
-        if (
-            self.config.optimize_every_epochs
-            and not staged  # same contract as the expiry gate above
-            and batch_id > 0
-            and batch_id % self.config.optimize_every_epochs == 0
-        ):
-            try:
-                self.table.optimize(
-                    max_delta_files=self.config.delta_compact_max_files,
-                    max_files_per_bucket=self.config.optimize_max_files_per_bucket,
-                    keep_snapshots=self.config.keep_snapshots,
-                    orphan_grace_seconds=self.config.optimize_orphan_grace_seconds,
-                )
-            except (ConcurrentModification, CommitConflict):
-                pass
+        # expire + orphans)
+        if self._due(self.config.optimize_every_epochs, batch_id, staged):
+            self._maintain(
+                skipped,
+                "optimize",
+                max_delta_files=self.config.delta_compact_max_files,
+                max_files_per_bucket=self.config.optimize_max_files_per_bucket,
+                keep_snapshots=self.config.keep_snapshots,
+                orphan_grace_seconds=self.config.optimize_orphan_grace_seconds,
+            )
 
         duration = time.time() - t0
         self.lineage_log.append(
@@ -528,6 +475,7 @@ class CdcEngine:
                 "upserts": res.upserts,
                 "deletes": res.deletes,
                 "strategy": res.strategy,
+                "fallbacks": res.fallbacks,
                 "hot_epoch": bool(hot),
                 "schema_applied": schema_res.applied,
                 "schema_rejected": schema_res.rejected,
@@ -539,13 +487,29 @@ class CdcEngine:
                 "duration_sec": round(duration, 3),
                 "events_per_sec": round(n_events / duration, 1) if duration > 0 else None,
                 "next_rate_cap": self.rate.cap,
-                "split_threshold": (
-                    int(self.split_ctl.threshold) if self.split_ctl else None
-                ),
+                "maintenance_skipped": skipped,
                 "ts": time.strftime("%Y-%m-%dT%H:%M:%S"),
             }
         )
         return res
+
+    @staticmethod
+    def _due(every_epochs: int | None, batch_id: int, staged: bool) -> bool:
+        # staged epochs run no periodic maintenance: its commits would
+        # invalidate the staged baseline (compaction rewrites the very
+        # buckets the pending publish validates against) — the txn owner
+        # publishes first; maintenance runs on later, non-staged epochs
+        return bool(every_epochs) and not staged and batch_id > 0 and (
+            batch_id % every_epochs == 0
+        )
+
+    def _maintain(self, skipped: list[str], name: str, **kwargs) -> None:
+        """Run the post-commit maintenance step ``self.table.<name>``; a
+        racing writer skips it and the skip is appended to ``skipped``."""
+        try:
+            getattr(self.table, name)(**kwargs)
+        except (ConcurrentModification, CommitConflict):
+            skipped.append(name)
 
     # -------------------------------------------------- structured streaming
     def run_stream(

@@ -39,7 +39,10 @@ def main() -> int:
     ap.add_argument("--incremental", action="store_true", help="LSN-sliced loop instead of streaming")
     ap.add_argument("--max-files-per-trigger", type=int, default=16)
     ap.add_argument("--max-epochs", type=int, default=10_000)
-    ap.add_argument("--shuffle-partitions", type=int, default=None)
+    ap.add_argument(
+        "--shuffle-partitions", dest="sql_partitions", type=int, default=None,
+        help="spark.sql.shuffle.partitions for the session",
+    )
     ap.add_argument(
         "--mor",
         action="store_true",
@@ -57,8 +60,8 @@ def main() -> int:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    if args.shuffle_partitions:
-        builder = builder.config("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
+    if args.sql_partitions:
+        builder = builder.config("spark.sql.shuffle.partitions", str(args.sql_partitions))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

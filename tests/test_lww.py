@@ -3,7 +3,6 @@ import datetime as dt
 from pyspark.sql import types as T
 
 from nvimagecodec_spark.operators.lww import lww_dedupe, lww_dedupe_window
-from nvimagecodec_spark.operators.skew import lww_dedupe_salted
 
 SCHEMA = T.StructType(
     [
@@ -48,13 +47,6 @@ def test_agg_and_window_agree(spark):
     a = sorted(map(tuple, lww_dedupe(df).select(*SCHEMA.names).collect()))
     b = sorted(map(tuple, lww_dedupe_window(df).select(*SCHEMA.names).collect()))
     assert a == b
-
-
-def test_salted_agrees(spark):
-    df = spark.createDataFrame([r for r in _rows() if r[4] is not None], SCHEMA)
-    a = sorted(map(tuple, lww_dedupe(df).select(*SCHEMA.names).collect()))
-    c = sorted(map(tuple, lww_dedupe_salted(df, salt_buckets=4).select(*SCHEMA.names).collect()))
-    assert a == c
 
 
 def test_partial_aggregation_in_plan(spark):

@@ -171,3 +171,40 @@ def test_engine_periodic_optimize_sweep(spark, tmp_path):
     got = canon_spark(table.read_logical())
     want = canon_oracle(apply_events_pandas(events))
     assert len(got) == len(want)
+
+
+def test_engine_records_skipped_maintenance(spark, tmp_path, monkeypatch):
+    """Post-commit maintenance that loses a race to another writer is
+    skipped, never fails the epoch, and is recorded by step name in the
+    epoch's lineage record."""
+    from nvimagecodec_spark.config import EngineConfig
+    from nvimagecodec_spark.lakehouse.table import ConcurrentModification
+    from nvimagecodec_spark.sources.generator import (
+        events_to_files,
+        generate_change_events,
+    )
+    from nvimagecodec_spark.streaming.engine import CdcEngine
+    from tests.test_apply_end_to_end import TARGET_SCHEMA
+
+    events = generate_change_events(n_events=400, seed=3, with_schema_events=False)
+    stream_dir = os.path.join(str(tmp_path), "stream")
+    events_to_files(events, stream_dir, files=2)
+    table = LakeTable.create(
+        spark, os.path.join(str(tmp_path), "t"), TARGET_SCHEMA,
+        ["conv_id", "turn_idx"], bucket_count=4,
+    )
+
+    def racing_expire(self, *a, **k):
+        raise ConcurrentModification("simulated racing writer")
+
+    monkeypatch.setattr(LakeTable, "expire_snapshots", racing_expire)
+    engine = CdcEngine(
+        spark, table, source_id="mnt", config=EngineConfig(expire_every_epochs=1)
+    )
+    assert engine.run_stream(stream_dir, max_files_per_trigger=1) == 2
+    recs = engine.lineage()
+    # expiry is due from batch 1 on (batch 0 never runs maintenance)
+    assert [r["maintenance_skipped"] for r in recs] == [[], ["expire_snapshots"]]
+    for r in recs:
+        assert r["snapshot_id"] is not None
+        assert table.has_commit_tag("mnt", r["batch_id"])
